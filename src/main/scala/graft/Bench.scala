@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds. A
+  * query that throws reads -1 in the artifact, and the run then exits 1
+  * naming it.
   *
   * Protocol (round 7, "interleaved"): per query, one untimed warmup run
   * immediately followed by its timed reps (min reported). Through round 6
@@ -249,20 +251,12 @@ object Bench {
       }
     }
 
-    def run(name: String): Long = {
-      val t0 = System.nanoTime()
-      // noop write, NOT count(): count() lets Catalyst elide the entire
-      // body of projection-only queries (select md5(..) + orderBy plans
-      // as a column-less FileScan), which would report those queries as
-      // free. The noop sink materializes every output row.
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1L
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def run(name: String): Long =
+      runOnce(spark, sfDir, name, SparkEntry.queries(name)) match {
+        case Right(ns) => ns
+        case Left(_) => failed += name; -1L
       }
-      System.nanoTime() - t0
-    }
 
     // interleaved protocol: warmup, then timed reps, per query — the
     // timed window opens immediately after the query's own warmup.
@@ -374,5 +368,23 @@ object Bench {
     require(shortJson.length < stdoutGuard, s"bench stdout line too long: ${shortJson.length}")
     spark.stop()
     println(shortJson)
+    Verify.failLoud("bench", failed.toSeq)
+  }
+
+  /** One timed execution of query `q` into the noop sink: elapsed ns, or
+    * the error (logged). Noop write, NOT count(): count() lets Catalyst
+    * elide the entire body of projection-only queries (select md5(..) +
+    * orderBy plans as a column-less FileScan), which would report those
+    * queries as free. The noop sink materializes every output row. */
+  def runOnce(spark: SparkSession, sfDir: String, name: String,
+      q: (SparkSession, String) => DataFrame): Either[Throwable, Long] = {
+    val t0 = System.nanoTime()
+    try {
+      q(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Right(System.nanoTime() - t0)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      Left(e)
+    }
   }
 }

@@ -16,14 +16,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * consumer the same leaf-rooted frame. Values are unchanged: the
   * checkpoint holds exactly the rows the plan computes from the parquet
   * inputs, lives only for the session (never on cross-run storage), and
-  * [[forgetDir]] drops a corpus's entries on in-session rewrite
-  * (wired into Dedup.invalidateClusters). At cluster scale this is the
-  * standard "materialize the model/stage table once per run" discipline
-  * (guide §3.3 "materialising an intermediate result truncates the
-  * plan"; §5 localCheckpoint).
+  * [[Staging.forget]] drops a corpus's entries on in-session rewrite.
+  * At cluster scale this is the standard "materialize the model/stage
+  * table once per run" discipline (guide §3.3 "materialising an
+  * intermediate result truncates the plan"; §5 localCheckpoint).
   *
-  * Mechanics shared with Dedup's ccMemo (the original instance of this
-  * pattern): single-flight per key — the miss path runs multi-second
+  * Mechanics: single-flight per key — the miss path runs multi-second
   * Spark jobs, so concurrent callers for one key must not each compute,
   * while different keys must not serialize behind a global lock — and a
   * cheap head(1) liveness probe on every hit, because localCheckpoint
@@ -57,9 +55,9 @@ object SessionMemo {
     }
   }
 
-  /** Drop every family's entry for corpus `dir` (all sessions) — the
-    * corpus-rewrite hook; recompute-on-next-use, never correctness. */
-  def forgetDir(dir: String): Unit = {
+  /** Drop every family's entry for corpus `dir` (all sessions); reached
+    * through [[Staging.forget]]. */
+  private[graft] def forget(dir: String): Unit = {
     val suffix = "@" + canonDir(dir)
     memo.keys.filter(_._2.endsWith(suffix)).foreach(memo.remove)
   }

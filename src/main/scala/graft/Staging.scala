@@ -1,24 +1,35 @@
 package graft
 
-/** Shared parquet staging: a configurable root, a canonical-path-keyed
-  * directory per (namespace, corpus), and a single-flight write-once memo.
-  * This is the q105 staging discipline (one eager materialization serves
-  * every subsequent plan construction; two threads never interleave
-  * overwrite-and-read on one dir) factored out so the dedup shingle stage
-  * (Dedup.minhashLshStaged) and the ANN index stages (Similarity
-  * q150/q151) share one implementation.
+/** The one store for session intermediates — every kind of corpus-derived
+  * state the suite builds once and reuses across queries:
+  *
+  *  - STAGED: files written once per corpus under
+  *    `<root>/<ns>-<md5(canonical corpus)>` ([[dirFor]]) by a
+  *    single-flight [[once]] / [[onceAppend]] — parquet, ORC, XML and
+  *    JSONL re-serializations, bucketed catalog tables, index stages,
+  *    staged stream inputs and completed streaming checkpoints. Two
+  *    threads never interleave overwrite-and-read on one dir.
+  *  - CHECKPOINTED: lineage-truncated frames per (session, family,
+  *    canonical corpus) — [[SessionMemo]].
+  *
+  * FORGET CONTRACT: [[forget]]`(corpus)` is the single invalidation
+  * call. Because every stage dir embeds the md5 of the canonical corpus
+  * path and every [[SessionMemo]] key embeds the canonical corpus, it
+  * drops every in-JVM stage memo, every `.staged` marker and `.pre`
+  * manifest (nested `<dir>/x@step` keys included) and every checkpoint
+  * entry of that corpus with no per-stage list; the next use rebuilds.
+  * Stage data is left in place — rebuilds overwrite it.
   *
   * Durability: by default the root is a temp dir deleted on JVM exit
   * (tests, one-shot jobs). Setting `-Dgraft.stage.dir=<path>` points the
   * root at real storage and the stages become DURABLE: every completed
   * [[once]] drops a `<key>.staged` marker next to the stage, and a fresh
   * JVM seeing the marker serves the existing files instead of rebuilding —
-  * the "materialized once" contract survives restarts. [[forget]] removes
-  * the marker with the memo, so corpus-rewrite invalidation works the
-  * same in both modes. (Markers are written in both modes; under the temp
-  * root they die with the JVM, so they add nothing — and cost nothing.)
-  * Single-flight is per-JVM; concurrent DRIVERS racing one durable stage
-  * need external coordination, as with any shared output path.
+  * the "materialized once" contract survives restarts. A stage with
+  * catalog state beside its files (bucketed tables) must re-register it
+  * idempotently OUTSIDE [[once]]. Single-flight is per-JVM; concurrent
+  * DRIVERS racing one durable stage need external coordination, as with
+  * any shared output path.
   */
 object Staging {
 
@@ -55,17 +66,19 @@ object Staging {
   private def hasData(f: java.io.File): Boolean =
     f.isFile || (f.isDirectory && Option(f.listFiles).exists(_.nonEmpty))
 
-  /** Stage directory for (`ns`, corpus `d`) — keyed by the md5 of the
-    * CANONICAL absolute corpus path, so distinct corpora can never share
-    * a stage (a lossy character substitution would map '/a/b' and '/a_b'
-    * to one key). */
-  def dirFor(ns: String, d: String): String = {
+  /** md5 of the CANONICAL absolute corpus path: distinct corpora can
+    * never share a key (a lossy character substitution would map '/a/b'
+    * and '/a_b' to one key), and `d` / `d/.` always do. */
+  private def corpusKey(d: String): String = {
     val canon = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    val key = java.security.MessageDigest.getInstance("MD5")
+    java.security.MessageDigest.getInstance("MD5")
       .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
-    root.resolve(s"$ns-$key").toString
   }
+
+  /** Stage directory for (`ns`, corpus `d`). */
+  def dirFor(ns: String, d: String): String =
+    root.resolve(s"$ns-${corpusKey(d)}").toString
 
   /** Run `write` the first time `key` is staged — in this JVM (memo) or,
     * under a durable root, EVER (marker file); no-op after (memoized,
@@ -89,7 +102,7 @@ object Staging {
       if (!written.contains(key)) {
         // stale marker (data lost after a completed stage): rebuild
         if (marker(key).isFile && !hasData(new java.io.File(dataDir)))
-          forget(key)
+          forgetKey(key)
         if (!marker(key).isFile) {
           write
           if (!hasData(new java.io.File(dataDir)))
@@ -156,11 +169,24 @@ object Staging {
     dirs.map(new java.io.File(_)).filter(_.exists).flatMap(walk)
   }
 
-  /** Forget a stage so the next [[once]] re-writes it — the in-session
-    * corpus-rewrite hook (Dedup.invalidateClusters routes here). Drops
-    * the durable marker too, so invalidation survives into the next JVM. */
-  def forget(key: String): Unit = {
+  /** Forget one stage key so the next [[once]] re-writes it (marker
+    * included, so it holds in the next JVM too). */
+  private[graft] def forgetKey(key: String): Unit = {
     written.remove(key); marker(key).delete(); preManifest(key).delete(); ()
+  }
+
+  /** Forget everything staged or checkpointed for corpus `d` — the
+    * in-session corpus-rewrite hook (see the object doc's contract). */
+  def forget(d: String): Unit = {
+    val tag = "-" + corpusKey(d)
+    written.keys.filter(_.contains(tag)).foreach(written.remove)
+    def dropMarkers(f: java.io.File): Unit =
+      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(dropMarkers))
+      else if (f.getName.endsWith(".staged") || f.getName.endsWith(".pre"))
+        f.delete()
+    Option(root.toFile.listFiles).toSeq.flatten
+      .filter(_.getName.contains(tag)).foreach(dropMarkers)
+    SessionMemo.forget(d)
   }
 
   /** Spec probe: the file list [[onceAppend]] would snapshot for `dirs`. */

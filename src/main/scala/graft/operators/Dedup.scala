@@ -456,12 +456,7 @@ object Dedup {
     *
     * NOTE: building this frame WRITES the stage as a side effect — an
     * eager parquet write, deliberate (the verify plan analyzes against the
-    * staged files) but memoized per (JVM, workDir) with a single-flight
-    * lock, so repeated plan construction (bench reps, q105 lookups,
-    * plan-only inspection after the first) re-stages nothing and two
-    * threads never interleave overwrite-and-read on the same dir.
-    * [[invalidateClusters]] drops the memo entry for the corpus's default
-    * stage so an in-session corpus rewrite re-stages. */
+    * staged files), staged once per workDir by [[graft.Staging.once]]. */
   def minhashLshStaged(s: SparkSession, d: String, workDir: String): DataFrame = {
     graft.Staging.once(workDir) {
       shingles(s, d).write.mode("overwrite").parquet(s"$workDir/shingles")
@@ -469,8 +464,7 @@ object Dedup {
     minhashLshFrom(s.read.parquet(s"$workDir/shingles"))
   }
 
-  /** Stage directory for corpus `d` (shared [[graft.Staging]] root —
-    * md5-of-canonical-path keyed, single-flight, deleted on JVM exit). */
+  /** Stage directory for corpus `d` (see [[graft.Staging]]). */
   def stageDir(d: String): String = graft.Staging.dirFor("dedup", d)
 
   /** Near-dup CLUSTERS + survivor selection (q69) — the step a real dedup
@@ -485,72 +479,32 @@ object Dedup {
     * the same iterate-to-fixpoint shape GraphX/Pregel uses, each round one
     * join + one partial-agg groupBy). Labels only decrease, so the sum of
     * labels is a strictly-decreasing convergence witness — one cheap
-    * scalar action per round, no self-join diffing. */
-  /** The CC labels are memoized per (session, dir): unlike the declarative
-    * shingle/signature frames (shared through the cache manager by plan
-    * identity), the fixpoint loop runs driver-side actions, so each caller
-    * would re-execute it. One computation serves q69 + q77 — the
-    * in-session analog of staging the labels table once per corpus, which
-    * is exactly what a 100 TB pipeline would persist between stages. */
-  private val ccMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def nearDupClusters(s: SparkSession, d: String): DataFrame = {
-    // evict entries pinned to stopped sessions (their blocks are gone
-    // anyway); a long-lived multi-session app never accumulates state
-    ccMemo.keys.filter(_._1.sparkContext.isStopped).foreach(ccMemo.remove)
-    ccLocks.keys.filter(_._1.sparkContext.isStopped).foreach(ccLocks.remove)
-    // liveness probe on a memo hit: the labels frame is backed by
-    // localCheckpoint blocks, which are NOT fault-tolerant — on a cluster
-    // an executor loss takes them with it. The frame is O(near-dup docs)
-    // tiny, so head(1) is a cheap validity check; on failure recompute
-    // instead of serving a permanently broken frame for the session.
-    // single-flight PER KEY: the miss path runs a multi-second
-    // driver-side fixpoint loop, so concurrent callers for the same
-    // (session, dir) must not each compute their own labels frame —
-    // while callers for DIFFERENT corpora must not serialize behind one
-    // global monitor (the lock is held across Spark actions)
-    ccLocks.getOrElseUpdate((s, d), new Object).synchronized {
-      ccMemo.get((s, d))
-        .filter(df => scala.util.Try(df.head(1)).isSuccess)
-        .getOrElse {
-          val fresh = clustersFromPairs(
-            minhashLshFrom(shingles(s, d)).select(col("i"), col("j")))
-          ccMemo((s, d)) = fresh
-          fresh
-        }
+    * scalar action per round, no self-join diffing.
+    *
+    * The CC labels are memoized per (session, corpus) through
+    * [[graft.SessionMemo]]: unlike the declarative shingle/signature
+    * frames (shared through the cache manager by plan identity), the
+    * fixpoint loop runs driver-side actions, so each caller would
+    * re-execute it. One computation serves q69 + q77 — the in-session
+    * analog of staging the labels table once per corpus, which is exactly
+    * what a 100 TB pipeline would persist between stages. */
+  def nearDupClusters(s: SparkSession, d: String): DataFrame =
+    graft.SessionMemo.once(s, "dedup-cc", d) {
+      clustersFromPairs(
+        minhashLshFrom(shingles(s, d)).select(col("i"), col("j")))
     }
-  }
 
-  private val ccLocks =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Object]
-
-  /** Invalidate everything this module has staged for (session, dir) —
-    * required after rewriting the corpus under `d` in-session, and the
-    * release hook a long-lived driver calls when done with a corpus.
-    * Drops the memoized CC labels, UNPERSISTS every frame the library
+  /** Invalidate everything the library has staged or memoized for corpus
+    * `d` — required after rewriting the corpus under `d` in-session, and
+    * the release hook a long-lived driver calls when done with a corpus:
+    * forgets every stage and checkpointed frame of the corpus
+    * ([[graft.Staging.forget]]), UNPERSISTS every frame the library
     * registered for the session (see [[graft.CacheRegistry]] — without
     * this the cache accumulates one entry per corpus per query family for
-    * the session's lifetime), forgets the corpus's parquet stage (so q105
-    * re-stages), and refreshes the path-derived cache entries. */
+    * the session's lifetime), and refreshes the path-derived cache
+    * entries. */
   def invalidateClusters(s: SparkSession, d: String): Unit = {
-    ccMemo.remove((s, d))
-    graft.SessionMemo.forgetDir(d)
-    graft.Staging.forget(stageDir(d))
-    // library-wide: every per-corpus memo in the session dies with the
-    // corpus, not just this module's — the staged ANN index (q150) would
-    // otherwise serve stale PQ codes against a fresh oracle, and the
-    // streaming schema probe would describe the old physical generation
-    graft.operators.Similarity.forgetAnnStages(d)
-    graft.Staging.forget(graft.Staging.dirFor("rollup", d)) // q155's stage
-    graft.Staging.forget(graft.sources.CompactionStage.fragDir(d)) // q158
-    graft.Staging.forget(graft.sources.CompactionStage.compactDir(d))
-    graft.Staging.forget(graft.Staging.dirFor("sessstream", d)) // q159
-    graft.Staging.forget(graft.sources.SchemaEvolutionStage.evoDir(d)) // q166
-    graft.operators.TextAnalysis.forgetLexStages(d) // q168/q169
-    graft.Staging.forget(graft.Staging.dirFor("cdcstream", d)) // q172
-    graft.Staging.forget(s"${graft.Staging.dirFor("cdcsink", d)}@run")
-    graft.streaming.Streaming.forgetTsField(d)
+    graft.Staging.forget(d)
     graft.CacheRegistry.release(s)
     s.catalog.refreshByPath(d)
   }

@@ -4014,8 +4014,7 @@ object Relational {
       // existing (day, type) group through the same union re-agg — no
       // special case. Money is integer cents (the Tables contract), so
       // partial sums merge exactly in any order. Per-query cost:
-      // O(delta) + O(|rollup|), not O(history); the stage invalidates
-      // with the corpus via Dedup.invalidateClusters.
+      // O(delta) + O(|rollup|), not O(history).
       val cut = lit(java.sql.Timestamp.valueOf("2024-01-30 00:00:00"))
       def partial(ev: DataFrame) = ev
         .select(to_date(col("ts")).as("day"), col("event_type"),

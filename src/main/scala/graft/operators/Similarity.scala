@@ -219,8 +219,8 @@ object Similarity {
     * [[graft.SessionMemo]] truncates the finished model to a leaf and
     * hands every consumer in the session the SAME frame — training
     * literally runs once per (session, corpus). Values are unchanged.
-    * [[forgetAnnStages]] drops a corpus's entries on rewrite, exactly
-    * like the parquet stages. */
+    * [[graft.Staging.forget]] drops a corpus's entries on rewrite, with
+    * its parquet stages. */
   private def trainedOnce(s: SparkSession, d: String, key: String)
       (build: => DataFrame): DataFrame =
     graft.SessionMemo.once(s, s"ann-$key", d)(build)
@@ -508,20 +508,6 @@ object Similarity {
   val AnnIncSeedBound = 10
   val AnnIncCbBound = 20
 
-  /** Corpus-rewrite hook for every ANN stage of `d` (q150's composed
-    * index and q151's incremental build+admission) —
-    * Dedup.invalidateClusters routes here. Dropping the base key makes
-    * the next q151 rebuild OVERWRITE the stage dir (clearing appended
-    * delta files with it), so a forgotten index can never double-admit. */
-  def forgetAnnStages(d: String): Unit = {
-    graft.Staging.forget(annStageDir(d))
-    graft.Staging.forget(s"${annIncStageDir(d)}/codes@base")
-    graft.Staging.forget(s"${annIncStageDir(d)}/codes@delta")
-    // the memoized trained frames describe the corpus too (r14) — a
-    // rewritten corpus must retrain, not serve stale checkpointed models
-    graft.SessionMemo.forgetDir(d)
-  }
-
   /** q151's base-trained centroid frame (Lloyd over base vectors only). */
   private def annIncCentroids(s: SparkSession, d: String): DataFrame =
     trainedOnce(s, d, "lloyd-inc") {
@@ -549,7 +535,8 @@ object Similarity {
 
   /** q151 step 1: materialize the BASE index (codes + cell assignment,
     * parquet partitioned by cell), single-flight; overwrite on rebuild so
-    * an invalidated index can never double-admit its old delta files. */
+    * a forgotten index (which drops the base AND delta keys) can never
+    * double-admit its old delta files. */
   def annIncBuild(s: SparkSession, d: String): Unit = {
     val stage = annIncStageDir(d)
     graft.Staging.once(s"$stage/codes@base") {

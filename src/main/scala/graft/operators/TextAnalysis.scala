@@ -360,16 +360,6 @@ object TextAnalysis {
   def isBaseDoc: org.apache.spark.sql.Column =
     (col("doc_id") % LexDeltaMod) =!= LexDeltaRem
 
-  /** Corpus-rewrite hook for the lexical index stages of `d` —
-    * Dedup.invalidateClusters routes here. Dropping the base key makes
-    * the next q169 rebuild OVERWRITE the stage (clearing appended delta
-    * files), so a forgotten index can never double-admit. */
-  def forgetLexStages(d: String): Unit = {
-    graft.Staging.forget(s"${lexStageDir(d)}@full")
-    graft.Staging.forget(s"${lexIncStageDir(d)}@base")
-    graft.Staging.forget(s"${lexIncStageDir(d)}@delta")
-  }
-
   /** Write postings (bucket-partitioned) + doclen for the docs `pred`
     * selects into `dir` with the given save mode — the shared body of
     * the full build (q168), base build and delta admission (q169). */
@@ -389,8 +379,8 @@ object TextAnalysis {
       lexWrite(s, d, None, lexStageDir(d), "overwrite")
     }
 
-  /** q169 step 1: materialize the BASE index (overwrite on rebuild so an
-    * invalidated index can never double-admit its old delta files). */
+  /** q169 step 1: materialize the BASE index (overwrite on rebuild so a
+    * forgotten index can never double-admit its old delta files). */
   def lexIncBuild(s: SparkSession, d: String): Unit =
     graft.Staging.once(s"${lexIncStageDir(d)}@base") {
       lexWrite(s, d, Some(isBaseDoc), lexIncStageDir(d), "overwrite")

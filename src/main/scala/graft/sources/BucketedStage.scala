@@ -13,56 +13,48 @@ import org.apache.spark.sql.functions._
   * left in q132 is the final tiny groupBy — spec-pinned to exactly one.
   *
   * Catalog mechanics: `bucketBy` requires `saveAsTable` (bucket metadata
-  * lives in the catalog, not the files); tables go in a dedicated
-  * database whose LOCATION is a temp root deleted on JVM exit. The
-  * ExternalCatalog is shared across all sessions of a SparkContext, so
-  * the per-(JVM, corpus) single-flight memo is session-safe — same stage
-  * discipline as q105/q117/q121/q130.
+  * lives in the catalog, not the files). The tables are UNMANAGED — their
+  * files sit in the [[graft.Staging]] dir, so dropping a table keeps them
+  * — and [[stage]] re-registers a missing one on every call, because
+  * a stage served from a durable marker (or by a fresh SparkContext)
+  * finds the files without the catalog entries. The ExternalCatalog is
+  * shared across all sessions of a SparkContext, so the per-corpus stage
+  * is session-safe.
   */
 object BucketedStage {
 
   val Buckets = 8
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val stageLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
-  private lazy val stageRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-bkt-")
-    sys.addShutdownHook {
-      def del(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(del)); p.delete(); ()
-      }
-      del(root.toFile)
-    }
-    root
-  }
+  /** (table, bucket key, source table) of the two bucketed sides. */
+  private val Sides = Seq(("orders_b", "o_custkey", "orders"),
+    ("customer_b", "c_custkey", "customer"))
 
   /** Bucketed stage for corpus `d`: returns the database holding
     * `orders_b` and `customer_b`, both bucketed+sorted on custkey. */
   def stage(s: SparkSession, d: String): String = {
-    val canon = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val db = s"graft_bkt_$key"
-    stageLocks.getOrElseUpdate(key, new Object).synchronized {
-      staged.getOrElseUpdate(key, {
-        val dir = stageRoot.resolve(key).toString
-        s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dir'")
-        graft.Tables.t(s, d, "orders")
+    val dir = stageDir(d)
+    val db = "graft_" + new java.io.File(dir).getName.replace('-', '_')
+    s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dir'")
+    graft.Staging.once(dir) {
+      Sides.foreach { case (tbl, key, src) =>
+        graft.Tables.t(s, d, src)
           .write.mode("overwrite").format("parquet")
-          .bucketBy(Buckets, "o_custkey").sortBy("o_custkey")
-          .saveAsTable(s"$db.orders_b")
-        graft.Tables.t(s, d, "customer")
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(Buckets, "c_custkey").sortBy("c_custkey")
-          .saveAsTable(s"$db.customer_b")
-        db
-      })
+          .bucketBy(Buckets, key).sortBy(key)
+          .option("path", s"$dir/$tbl")
+          .saveAsTable(s"$db.$tbl")
+      }
     }
+    // a stage served from its marker has the files, not the catalog entries
+    for ((tbl, key, src) <- Sides if !s.catalog.tableExists(db, tbl)) {
+      val cols = graft.Tables.t(s, d, src).schema.toDDL
+      s.sql(s"CREATE TABLE IF NOT EXISTS $db.$tbl ($cols) USING parquet " +
+        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS " +
+        s"LOCATION '$dir/$tbl'")
+    }
+    db
   }
+
+  def stageDir(d: String): String = graft.Staging.dirFor("bkt", d)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q132_bucketed_join" -> ((s, d) => {

@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
   * compacts per partition (q130's layout + this op inside each
   * directory), so the unit of work stays bounded; row-group-sorted
   * tables re-sort within output files (the q141 z-order key) instead of
-  * round-robin. Both stages invalidate with the corpus via
-  * Dedup.invalidateClusters' Staging hook.
+  * round-robin.
   */
 object CompactionStage {
 

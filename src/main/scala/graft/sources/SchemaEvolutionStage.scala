@@ -29,8 +29,7 @@ import org.apache.spark.sql.functions._
   * DISCOVERY-time tool that derives that schema. The data-plane cost
   * model is unchanged: column pruning and filter pushdown still reach
   * each file (a v1 file never materializes the columns it lacks), and
-  * the null-fill is per-batch metadata, not a rewrite. The stage
-  * invalidates with the corpus via Dedup.invalidateClusters.
+  * the null-fill is per-batch metadata, not a rewrite.
   */
 object SchemaEvolutionStage {
 

@@ -24,7 +24,7 @@ object StreamProbe {
     spark.sparkContext.setLogLevel("ERROR")
 
     for (rep <- 1 to 3) {
-      graft.Staging.forget(graft.Staging.dirFor("sessstream", d))
+      graft.Staging.forgetKey(graft.Staging.dirFor("sessstream", d))
       val t0 = System.nanoTime()
       val (df, progress) = Streaming.sessionTimersWithProgress(spark, d)
       val rows = df.count()

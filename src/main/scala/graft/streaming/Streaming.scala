@@ -311,32 +311,17 @@ object Streaming {
     val dir = graft.Staging.dirFor("sessstream", d)
     graft.Staging.once(dir) {
       import s.implicits._
-      def stampParts(mtime: Long, stamped: Set[String]): Set[String] = {
-        val dp = java.nio.file.Paths.get(dir)
-        val parts = java.nio.file.Files.list(dp).iterator()
-        var seen = stamped
-        while (parts.hasNext) {
-          val p = parts.next()
-          if (p.getFileName.toString.startsWith("part-") &&
-              !seen(p.getFileName.toString)) {
-            java.nio.file.Files.setLastModifiedTime(p,
-              java.nio.file.attribute.FileTime.fromMillis(mtime))
-            seen += p.getFileName.toString
-          }
-        }
-        seen
-      }
       events(s, d)
         .select(col("user_id"), col("ts"), cents(col("value")).as("cts"))
         .coalesce(1).write.mode("overwrite").parquet(dir)
       val t0 = System.currentTimeMillis() - 300000
-      var stamped = stampParts(t0, Set.empty)
+      var stamped = stampParts(dir, t0, Set.empty)
       Seq("2024-02-01 00:00:00", "2024-02-15 00:00:00").zipWithIndex
         .foreach { case (t, i) =>
           Seq((-1L, java.sql.Timestamp.valueOf(t), 0L))
             .toDF("user_id", "ts", "cts")
             .coalesce(1).write.mode("append").parquet(dir)
-          stamped = stampParts(t0 + 60000L * (i + 1), stamped)
+          stamped = stampParts(dir, t0 + 60000L * (i + 1), stamped)
         }
     }
     dir
@@ -358,16 +343,18 @@ object Streaming {
   /** readStream over the events parquet; `ts` lands as TimestampType for
     * either physical generation (ns-as-long converted, us read directly).
     * The physical-type probe reads the batch parquet footer, so it is
-    * memoized per canonical dir (the ckptMemo pattern) — q97 builds two
-    * streams per invocation and would otherwise pay the footer read
-    * twice per run, every run. */
+    * memoized per (canonical dir, events.parquet length + mtime) — q97
+    * builds two streams per invocation and would otherwise pay the footer
+    * read twice per run, every run; a rewritten file is a new key. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     // conf, not probe: the streaming read itself needs nanosAsLong on
     // THIS session (fresh clones don't share the memo's session), and
     // setting a conf is cheap — only the footer read is worth memoizing.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val canon = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-    val physicalTs = tsFieldMemo.getOrElseUpdate(canon,
+    val f = java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath
+      .normalize.toFile
+    val physicalTs = tsFieldMemo.getOrElseUpdate(
+      (f.getPath, f.length, f.lastModified),
       graft.Tables.t(spark, dir, "events").schema("ts"))
     val stream = spark.readStream
       .schema(eventsRawSchema(physicalTs))
@@ -378,18 +365,11 @@ object Streaming {
     else stream
   }
 
-  /** events.ts physical StructField per canonical dir — a property of the
-    * files, not the session, so one probe serves every session/clone. */
+  /** events.ts physical StructField per events file identity — a property
+    * of the file, not the session, so one probe serves every
+    * session/clone. */
   private val tsFieldMemo = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.types.StructField]
-
-  /** Corpus-rewrite hook (Dedup.invalidateClusters routes here): drop the
-    * memoized physical ts field so a regenerated events.parquet — possibly
-    * in the other physical generation (ns-as-long vs us) — is re-probed. */
-  def forgetTsField(dir: String): Unit = {
-    val canon = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-    tsFieldMemo.remove(canon); ()
-  }
+    .empty[(String, Long, Long), org.apache.spark.sql.types.StructField]
 
   /** Tumbling 1-hour windows per event_type with a 30-minute watermark,
     * executed as a real streaming query into a memory sink. Complete mode:
@@ -413,55 +393,62 @@ object Streaming {
     drainMemorySink(sp, name).orderBy("window_start", "event_type")
   }
 
-  /** Completed checkpoint for q142: a per-type count+sum aggregation run
-    * to completion with an explicit checkpointLocation. Written once per
-    * (JVM, corpus) — md5-keyed temp dir, single-flight, deleted on JVM
-    * exit (the q105/q121 stage discipline). */
-  private val ckptMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val ckptLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-  private lazy val ckptRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-")
-    sys.addShutdownHook {
-      def del(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(del)); p.delete(); ()
+  /** Stamp `mtime` on every `part-` file in `dir` not already in
+    * `stamped` (the arrival order of a staged stream, see
+    * [[sessStreamDir]]); returns the grown stamped set. */
+  private def stampParts(dir: String, mtime: Long,
+      stamped: Set[String]): Set[String] = {
+    val parts = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      .iterator()
+    var seen = stamped
+    while (parts.hasNext) {
+      val p = parts.next()
+      if (p.getFileName.toString.startsWith("part-") &&
+          !seen(p.getFileName.toString)) {
+        java.nio.file.Files.setLastModifiedTime(p,
+          java.nio.file.attribute.FileTime.fromMillis(mtime))
+        seen += p.getFileName.toString
       }
-      del(root.toFile)
     }
-    root
+    seen
   }
 
+  private def deleteTree(path: String): Unit = {
+    def del(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
+    }
+    del(new java.io.File(path))
+  }
+
+  /** Completed checkpoint for q142: a per-type count+sum aggregation run
+    * to completion with an explicit checkpointLocation, staged once per
+    * (corpus, state-store provider) through [[graft.Staging]]. */
   def stateCheckpoint(sp: SparkSession, d: String): String = {
-    val canon = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
-    // the provider class joins the memo key: a checkpoint's state files
-    // are provider-formatted, so a RocksDB session must BUILD its own
-    // checkpoint rather than reuse one the HDFS-backed provider wrote in
-    // the same JVM — without this, StateStoreMatrixSpec's q142 RocksDB
-    // leg would silently re-read HDFS-provider state (round-12, the
-    // round-11 verdict #6 config matrix)
+    // the provider class joins the stage namespace: a checkpoint's state
+    // files are provider-formatted, so a RocksDB session must BUILD its
+    // own checkpoint rather than reuse one the HDFS-backed provider wrote
+    // — without this, StateStoreMatrixSpec's q142 RocksDB leg would
+    // silently re-read HDFS-provider state
     val provider = sp.conf.getOption(
       "spark.sql.streaming.stateStore.providerClass").getOrElse("default")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$canon|$provider"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    ckptLocks.getOrElseUpdate(key, new Object).synchronized {
-      ckptMemo.getOrElseUpdate(key, {
-        val ckpt = ckptRoot.resolve(key).toString
-        val name = s"graft_ckpt_${System.nanoTime()}"
-        val q = eventsStream(sp, d)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("sum_cents"))
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .format("memory").queryName(name)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        sp.catalog.dropTempView(name)
-        ckpt
-      })
+    val ckpt = graft.Staging.dirFor(s"ckpt-$provider", d)
+    graft.Staging.once(ckpt) {
+      // a rebuild after a corpus rewrite must not RESUME the old run: the
+      // file source would skip the rewritten (already seen) events file
+      // and serve the old state
+      deleteTree(ckpt)
+      val name = s"graft_ckpt_${System.nanoTime()}"
+      val q = eventsStream(sp, d)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("sum_cents"))
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .format("memory").queryName(name)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      sp.catalog.dropTempView(name)
     }
+    ckpt
   }
 
   // ---- q172: streaming CDC sink (foreachBatch, idempotent LWW merge) --
@@ -571,12 +558,7 @@ object Streaming {
     * checkpoint). Exposed for CdcSinkSpec's two-phase restart probe. */
   private[streaming] def runCdcStream(sp: SparkSession, src: String,
       root: String, ckpt: String, d: String, wipe: Boolean = true): Unit = {
-    if (wipe) Seq(root, ckpt).foreach { p =>
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-      }
-      del(new java.io.File(p))
-    }
+    if (wipe) Seq(root, ckpt).foreach(deleteTree)
     val q = sp.readStream.schema(cdcSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(src)
@@ -1037,27 +1019,12 @@ object Streaming {
     val dir = graft.Staging.dirFor("latestream", d)
     graft.Staging.once(dir) {
       import s.implicits._
-      def stampParts(mtime: Long, stamped: Set[String]): Set[String] = {
-        val dp = java.nio.file.Paths.get(dir)
-        val parts = java.nio.file.Files.list(dp).iterator()
-        var seen = stamped
-        while (parts.hasNext) {
-          val p = parts.next()
-          if (p.getFileName.toString.startsWith("part-") &&
-              !seen(p.getFileName.toString)) {
-            java.nio.file.Files.setLastModifiedTime(p,
-              java.nio.file.attribute.FileTime.fromMillis(mtime))
-            seen += p.getFileName.toString
-          }
-        }
-        seen
-      }
       val ev = events(s, d).select(col("event_id"), col("ts"),
         graft.Tables.cents(col("value")).as("cts"))
       ev.where(pmod(col("event_id"), lit(101)) =!= 0)
         .coalesce(1).write.mode("overwrite").parquet(dir)
       val t0 = System.currentTimeMillis() - 300000
-      var stamped = stampParts(t0, Set.empty)
+      var stamped = stampParts(dir, t0, Set.empty)
       // spacer sentinel: advances the watermark past every real window
       // BEFORE the late file arrives — the watermark computed from
       // batch N's data is first ENFORCED against batch N+2's input
@@ -1068,12 +1035,12 @@ object Streaming {
       Seq((-1L, java.sql.Timestamp.valueOf("2024-02-15 00:00:00"), 0L))
         .toDF("event_id", "ts", "cts")
         .coalesce(1).write.mode("append").parquet(dir)
-      stamped = stampParts(t0 + 60000, stamped)
+      stamped = stampParts(dir, t0 + 60000, stamped)
       ev.where(pmod(col("event_id"), lit(101)) === 0)
         .select(col("event_id"),
           (col("ts") - expr("INTERVAL 2 DAYS")).as("ts"), col("cts"))
         .coalesce(1).write.mode("append").parquet(dir)
-      stamped = stampParts(t0 + 120000, stamped)
+      stamped = stampParts(dir, t0 + 120000, stamped)
       // closing sentinel: forces eviction of anything that (wrongly)
       // reached state after the late batch — if a late row had been
       // admitted, it would emit here and the oracle compare would
@@ -1081,7 +1048,7 @@ object Streaming {
       Seq((-1L, java.sql.Timestamp.valueOf("2024-06-01 00:00:00"), 0L))
         .toDF("event_id", "ts", "cts")
         .coalesce(1).write.mode("append").parquet(dir)
-      stampParts(t0 + 180000, stamped)
+      stampParts(dir, t0 + 180000, stamped)
       ()
     }
     dir
@@ -1155,21 +1122,6 @@ object Streaming {
       sentinel: Boolean): String = {
     val dir = graft.Staging.dirFor(ns, d)
     graft.Staging.once(dir) {
-      def stampParts(mtime: Long, stamped: Set[String]): Set[String] = {
-        val dp = java.nio.file.Paths.get(dir)
-        val parts = java.nio.file.Files.list(dp).iterator()
-        var seen = stamped
-        while (parts.hasNext) {
-          val p = parts.next()
-          if (p.getFileName.toString.startsWith("part-") &&
-              !seen(p.getFileName.toString)) {
-            java.nio.file.Files.setLastModifiedTime(p,
-              java.nio.file.attribute.FileTime.fromMillis(mtime))
-            seen += p.getFileName.toString
-          }
-        }
-        seen
-      }
       val ev = events(s, d)
         .where(col("event_type").isin("click", "purchase"))
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
@@ -1178,12 +1130,13 @@ object Streaming {
         .withColumn("slab", ntile(6).over(
           org.apache.spark.sql.expressions.Window
             .orderBy(col("ts"), col("event_id"))))
+      deleteTree(dir) // every slab APPENDS: a rebuild starts empty
       val t0 = System.currentTimeMillis() - 600000
       var stamped = Set.empty[String]
       (1 to 6).foreach { k =>
         ev.where(col("slab") === k).drop("slab")
           .coalesce(1).write.mode("append").parquet(dir)
-        stamped = stampParts(t0 + 60000L * k, stamped)
+        stamped = stampParts(dir, t0 + 60000L * k, stamped)
       }
       if (sentinel) {
         import s.implicits._
@@ -1198,7 +1151,7 @@ object Streaming {
         Seq((-1L, sentTs, -1L, "click"), (-2L, sentTs, -1L, "purchase"))
           .toDF("event_id", "ts", "user_id", "event_type")
           .coalesce(1).write.mode("append").parquet(dir)
-        stamped = stampParts(t0 + 60000L * 7, stamped)
+        stamped = stampParts(dir, t0 + 60000L * 7, stamped)
       }
     }
     dir
@@ -1208,7 +1161,7 @@ object Streaming {
     * returning the result AND the per-batch progress objects so
     * JoinStateBoundSpec can pin state-store row counts (numRowsTotal)
     * against cumulative input — the eviction proof. */
-  private[streaming] def ssJoinStateWithProgress(s: SparkSession, d: String)
+  private[graft] def ssJoinStateWithProgress(s: SparkSession, d: String)
       : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) =
     withStreamPartitions(s, 4) { sp =>
       val dir = ssjStreamDir(sp, d)

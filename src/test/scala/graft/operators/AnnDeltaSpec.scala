@@ -23,7 +23,7 @@ class AnnDeltaSpec extends SparkSpec {
 
   test("q151: delta admission appends into cell= dirs, base files untouched") {
     VectorExpressions.register(spark)
-    Similarity.forgetAnnStages(sf0001)
+    graft.Staging.forget(sf0001)
     val codesDir = new java.io.File(Similarity.annIncStageDir(sf0001) + "/codes")
 
     Similarity.annIncBuild(spark, sf0001)
@@ -91,7 +91,7 @@ class AnnDeltaSpec extends SparkSpec {
 
     val codesDir = new java.io.File(Similarity.annIncStageDir(sf0001) + "/codes")
     val staged = spark.read.parquet(codesDir.getAbsolutePath).count()
-    Similarity.forgetAnnStages(sf0001)
+    graft.Staging.forget(sf0001)
     val second = graft.SparkEntry.queries("q151_ann_delta")(spark, sf0001)
       .collect().toSeq
     assert(second == first, "rebuild must reproduce the served answer")
@@ -103,7 +103,7 @@ class AnnDeltaSpec extends SparkSpec {
 
   test("staging: durable marker survives a simulated restart; forget rebuilds") {
     val key = graft.Staging.dirFor("spec-durable", sf0001) + "/x"
-    graft.Staging.forget(key)
+    graft.Staging.forgetKey(key)
     var builds = 0
     // the write must leave data at the key path, like every real stage —
     // a marker with no data behind it is treated as STALE and rebuilt
@@ -120,7 +120,8 @@ class AnnDeltaSpec extends SparkSpec {
     build()
     assert(builds == 1,
       "the on-disk marker must carry 'already staged' across JVMs")
-    graft.Staging.forget(key)
+    // the corpus forget reaches the marker of a key nested in a stage dir
+    graft.Staging.forget(sf0001)
     build()
     assert(builds == 2, "forget must force a rebuild")
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.functions.VectorExpressions
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 class DedupSimilaritySpec extends SparkSpec {
@@ -130,26 +131,60 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
+  /** Every stage- or memo-backed query family over the four rewritten
+    * tables: q69 (checkpointed CC labels), the five format stages, q142's
+    * state checkpoint and the staged stream inputs. q97's suite body
+    * streams the events file itself; its join over the staged 6-slab
+    * arrival (the state probe's source) is the stage-backed row. */
+  private val RewriteTable: Seq[(String, (SparkSession, String) => DataFrame)] =
+    Seq("q69_dedup_clusters", "q117_jsonl_ingest", "q121_orc_ingest",
+      "q130_partitioned_scan", "q132_bucketed_join", "q138_xml_ingest",
+      "q142_statestore_read", "q97_stream_stream_join",
+      "q303_stream_late_drop", "q317_stream_outer_join")
+      .map(q => q -> graft.SparkEntry.queries(q)) :+
+      ("q97 over the staged slabs" -> ((s: SparkSession, d: String) =>
+        graft.streaming.Streaming.ssJoinStateWithProgress(s, d)._1))
+
   test("invalidateClusters picks up an in-session corpus rewrite") {
-    // the staged frames (shingles/pairs/labels) reflect the corpus at
-    // first materialization — after overwriting the files in-session,
-    // invalidateClusters must drop the memo AND refresh the path-derived
-    // cache entries so the next run sees the new data
-    val dir = tempDir("graft_inval").toString
-    val full = spark.read.parquet(s"$sf0001/documents.parquet")
-    full.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val before = Dedup.nearDupClusters(spark, dir).count()
-    assert(before > 0)
-    // rewrite: keep every doc that is NOT a near-dup pair member, so the
-    // new corpus has strictly fewer clusterable docs
-    val members = Dedup.nearDupClusters(spark, dir)
-      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    full.filter(!col("doc_id").isin(members.toSeq: _*))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // run each query on a private copy of the corpus (staging it), rewrite
+    // the tables it reads in place (about half the rows), invalidate, and
+    // rerun: the answer must equal the same query on a second copy of the
+    // rewritten data that nothing ever staged
+    val kept = Seq("documents" -> col("doc_id"), "events" -> col("event_id"),
+      "orders" -> col("o_orderkey"), "customer" -> col("c_custkey"))
+    def copyCorpus(prefix: String): String = {
+      val dir = tempDir(prefix)
+      new java.io.File(sf0001).listFiles.foreach(f =>
+        java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)))
+      dir.toString
+    }
+    // one parquet FILE per table, like the fixtures: the event streams
+    // glob for a file named events.parquet
+    def rewrite(dir: String): Unit = kept.foreach { case (tbl, key) =>
+      val tmp = tempDir("graft_rewrite").resolve("out").toString
+      graft.Tables.t(spark, sf0001, tbl).filter(key % 2 === 0)
+        .coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath,
+        java.nio.file.Paths.get(dir, s"$tbl.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    def rows(q: (SparkSession, String) => DataFrame, dir: String) =
+      q(spark, dir).collect().map(_.toString).toSeq.sorted
+    val dir = copyCorpus("graft_inval")
+    val before = RewriteTable.map { case (n, q) => n -> rows(q, dir) }.toMap
+    rewrite(dir)
     Dedup.invalidateClusters(spark, dir)
-    val after = Dedup.nearDupClusters(spark, dir).count()
-    assert(after < before,
-      s"rewrite removed all $before pair members but recompute saw $after")
+    val fresh = copyCorpus("graft_inval_fresh")
+    rewrite(fresh)
+    val stale = RewriteTable.filter { case (n, q) =>
+      val want = rows(q, fresh)
+      assert(want != before(n), s"$n: the rewrite must change its answer")
+      rows(q, dir) != want
+    }.map(_._1)
+    assert(stale.isEmpty,
+      s"served the pre-rewrite corpus after invalidation: ${stale.mkString(", ")}")
   }
 
   test("q64 simhash near-dup pairs overlap jaccard near-dups") {

@@ -274,7 +274,7 @@ class PipelineOpsSpec extends SparkSpec {
   test("q155: staged rollup == flat recompute; stage written once per corpus") {
     import graft.Staging
     val dir = Staging.dirFor("rollup", sf0001)
-    Staging.forget(dir)
+    Staging.forgetKey(dir)
     val got = Relational.queries("q155_incremental_rollup")(spark, sf0001)
     val flat = graft.Tables.events(spark, sf0001)
       .select(to_date(col("ts")).as("day"), col("event_type"),
@@ -290,7 +290,7 @@ class PipelineOpsSpec extends SparkSpec {
     // agrees; invalidation forces a rebuild path
     val again = Relational.queries("q155_incremental_rollup")(spark, sf0001)
     assert(again.collect().toSeq == flat.collect().toSeq)
-    Staging.forget(dir)
+    Staging.forgetKey(dir)
     assert(!Staging.isStaged(dir))
   }
 

@@ -15,8 +15,16 @@ object SparkEntry {
     onebrc.OneBrc.brcAgg(
       onebrc.OneBrc.stationsFromEvents(spark, "/root/testdata/sf0.001"))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each body
+    * first installs graft's SQL functions into the session it is given,
+    * so a caller's own session (any builder, no extension conf) runs
+    * every query. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.map { case (name, f) =>
+      name -> ((s: SparkSession, d: String) => { functions.Functions.install(s); f(s, d) })
+    }
+
+  private def modules: Map[String, (SparkSession, String) => DataFrame] =
     onebrc.OneBrc.queries ++
       operators.Relational.queries ++
       operators.SqlEntry.queries ++

@@ -21,24 +21,25 @@ object Tables {
     * (and its DuckDB parity contract) treats as plain TimestampType under a
     * UTC session, exactly as Spark 3 read it.
     *
-    * SESSION-WIDE CONTRACT: the conf flips once per session, at that
-    * session's first `t()` load (per-session memo below — not on every
-    * call, since mutating shared-session conf concurrently with other
-    * queries' planning is exactly what withStreamPartitions warns
-    * against). Any external code sharing the session therefore also sees
-    * NTZ inference off; a caller that genuinely needs TIMESTAMP_NTZ
-    * inference must use its own `newSession()`. */
+    * SESSION-WIDE CONTRACT: the confs flip once per session, at that
+    * session's first `t()` load. Every call reads them and sets only
+    * those that differ: setting them on every call would mutate
+    * shared-session conf concurrently with other queries' planning
+    * (exactly what withStreamPartitions warns against), and a
+    * per-session memo would keep every session it saw alive. Any
+    * external code sharing the session therefore also sees NTZ inference
+    * off; a caller that genuinely needs TIMESTAMP_NTZ inference must use
+    * its own session clone. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    configured.getOrElseUpdate(spark, {
-      configured.keys.filter(_.sparkContext.isStopped).foreach(configured.remove)
-      spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    })
+    parquetConfs.foreach { case (k, v) =>
+      if (!spark.conf.getOption(k).contains(v)) spark.conf.set(k, v)
+    }
     spark.read.parquet(s"$dir/$name.parquet")
   }
 
-  private val configured =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, Unit]
+  private val parquetConfs = Seq(
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** events.parquet `ts` has shipped in two physical forms across testdata
     * generations: parquet TIMESTAMP(NANOS) (which Spark's reader rejects —
@@ -81,12 +82,14 @@ object Tables {
     * threshold, legacy flags) — a query run in such a clone would diverge
     * from every batch query on the caller's session. Static confs can't
     * be re-set on a live session and are skipped (they're shared through
-    * the SparkContext anyway). */
+    * the SparkContext anyway). The clone's fresh function registry gets
+    * graft's SQL functions. */
   def sessionClone(base: SparkSession): SparkSession = {
     val s2 = base.newSession()
     base.conf.getAll.foreach { case (k, v) =>
       try s2.conf.set(k, v) catch { case _: Exception => () }
     }
+    functions.Functions.install(s2)
     s2
   }
 

@@ -10,14 +10,7 @@ object Verify {
     // a dev affordance (check one query locally); the driver passes two.
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val failed = dump(spark, sfDir, outDir, SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.exists(name.contains) })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

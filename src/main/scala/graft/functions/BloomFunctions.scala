@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
@@ -28,22 +27,12 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   * and shipped, never joined. */
 object BloomFunctions {
 
-  /** Builder shared by the temp-function path and GraftExtensions. */
-  def bloomAggBuilder(exprs: Seq[Expression]): Expression = bloomAgg(exprs)
-
-  private def bloomAgg(exprs: Seq[Expression]): Expression = exprs match {
+  /** `bloom_agg`'s builder in [[Functions.table]]: 1-3 arguments. */
+  def bloomAgg(exprs: Seq[Expression]): Expression = exprs match {
     case Seq(v)            => new BloomFilterAggregate(v)
     case Seq(v, est)       => new BloomFilterAggregate(v, est)
     case Seq(v, est, bits) => new BloomFilterAggregate(v, est, bits)
     case _ => throw new IllegalArgumentException(
       s"bloom_agg expects 1-3 arguments, got ${exprs.length}")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg", bloomAgg, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "might_contain",
-      exprs => BloomFilterMightContain(exprs.head, exprs(1)), "built-in")
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -172,12 +171,6 @@ case class BrcParseLine(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object BrcParseLine {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("brc_parse",
-      exprs => BrcParseLine(exprs.head), "built-in")
-}
-
 /** brc_station(line) -> string: the key slice, one exact-size allocation,
   * no struct row and no full-line byte copy (vs brc_parse: the measure
   * side of the hot path allocates nothing at all — see BrcTenths). */
@@ -225,13 +218,4 @@ case class BrcTenths(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object BrcSplitParse {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "brc_station", exprs => BrcStation(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "brc_tenths", exprs => BrcTenths(exprs.head), "built-in")
-  }
 }

@@ -265,22 +265,9 @@ case class NfcNormalize(child: Expression)
 }
 
 object VectorExpressions {
-  /** Register the expressions in the session's function registry so they
-    * are usable from SQL and via expr("...") — idempotent per session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim",
-      exprs => CosineSimilarity(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("rolling_hash",
-      exprs => RollingHash(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      exprs => NfcNormalize(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("rolling_window_hashes",
-      exprs => rollingWindowHashesBuilder(exprs), "built-in")
-  }
 
-  /** Builder shared with GraftExtensions' config-only injection. */
-  def rollingWindowHashesBuilder(exprs: Seq[Expression]): Expression =
+  /** `rolling_window_hashes`'s builder in [[Functions.table]]. */
+  def rollingWindowHashes(exprs: Seq[Expression]): Expression =
     RollingWindowHashes(exprs.head, litInt(exprs(1)))
 
   /** The window length binds into the generated code, so it must be a

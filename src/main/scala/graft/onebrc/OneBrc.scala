@@ -56,7 +56,6 @@ object OneBrc {
     * digit parse, the reference's tokenizer as a Catalyst expression).
     * Malformed lines yield nulls (drop them downstream if needed). */
   def readMeasurementsTurbo(spark: SparkSession, path: String): DataFrame = {
-    graft.functions.BrcParseLine.register(spark)
     spark.read.text(path)
       .select(expr("brc_parse(value)").as("m"))
       .select(col("m.station").as("station"), col("m.measure").as("measure"))
@@ -71,7 +70,6 @@ object OneBrc {
     * thebracket.rs:73-110). Output of brcAggTenths is bit-identical to
     * brcAgg over the double path on 1-dp data (FormatParitySpec). */
   def readMeasurementsTenths(spark: SparkSession, path: String): DataFrame = {
-    graft.functions.BrcSplitParse.register(spark)
     spark.read.text(path).select(
       expr("brc_station(value)").as("station"),
       expr("brc_tenths(value)").as("t"))
@@ -277,7 +275,6 @@ object OneBrc {
     "q18_custom_agg" -> ((s, d) => {
       // the reference's Records struct as a native SQL aggregate
       // (TypedImperativeAggregate, graft.functions.BrcStatsAgg)
-      graft.functions.BrcStatsAgg.register(s)
       stationsFromEvents(s, d)
         .groupBy(col("station"))
         .agg(expr("brc_stats(measure)").as("st"))

@@ -32,10 +32,12 @@ import org.apache.spark.sql.types.LongType
   *
   * Integration: [[AsOfJoinStrategy]] plans the node; it is injected via
   * `GraftExtensions` (config path) AND installable at runtime through
-  * `AsOfJoin.install` (`spark.experimental.extraStrategies` — reaches
-  * sessions built without the extension conf, e.g. the driver contract
-  * mains). `ts` columns must be LongType (epoch micros — the repo's
-  * exact-integer time idiom).
+  * `AsOfJoin.install` (`spark.experimental.extraStrategies`), which
+  * `asof` calls itself. That reaches sessions built without the
+  * extension conf: `graft.Sessions.local` (every main and the test
+  * session) installs the SQL functions but no plan extension. `ts`
+  * columns must be LongType (epoch micros — the repo's exact-integer
+  * time idiom).
   */
 case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,
     leftKey: Attribute, leftTs: Attribute,

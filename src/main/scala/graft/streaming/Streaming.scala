@@ -601,7 +601,6 @@ object Streaming {
       // the directory would update the per-station stats incrementally.
       // Single-batch over the golden fixture ⇒ equals the batch answer
       // (same oracle as q08/q19).
-      graft.functions.BrcSplitParse.register(sp)
       val name = s"graft_sbrc_${System.nanoTime()}"
       val q = sp.readStream
         .schema(StructType(Seq(StructField("value", StringType))))
@@ -635,7 +634,6 @@ object Streaming {
       // the batch q144 answer — SAME manifest oracle, which binds the
       // streaming scan, the binary decode expression and the sink
       // round-trip in one check.
-      graft.functions.PngFunctions.register(sp)
       val name = s"graft_smedia_${System.nanoTime()}"
       val q = sp.readStream
         .schema(StructType(Seq(
@@ -828,7 +826,6 @@ object Streaming {
       // across partitions. Single-batch over the static corpus ⇒ the
       // contract report (exact top-16 + guarantee booleans, the q106
       // harness — ONE shared definition) matches the shared oracle.
-      graft.functions.FreqSketchAgg.register(sp)
       val name = s"graft_shh_${System.nanoTime()}"
       val q = sp.readStream.schema(docsSchema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)

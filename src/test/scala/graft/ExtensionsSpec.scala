@@ -1,12 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("GraftExtensions injects cosine_sim/rolling_hash via session config") {
-    // force a fresh session (same SparkContext) so extensions apply
+  /** Run `body` on a fresh session (same SparkContext) built only with
+    * the extension, so nothing but GraftExtensions supplies functions. */
+  private def withExtensionSession(body: SparkSession => Unit): Unit = {
     val prior = SparkSession.getDefaultSession
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     val s = SparkSession.builder()
@@ -14,7 +16,25 @@ class ExtensionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
-    try {
+    try body(s)
+    finally {
+      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+      prior.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
+  test("every function of the table resolves in an extension-only session") {
+    withExtensionSession { s =>
+      val names = graft.functions.Functions.table.map(_.name)
+      assert(names.size == 40 && names.distinct == names)
+      val missing = names.filterNot(n =>
+        s.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
+      assert(missing.isEmpty, s"not injected: ${missing.mkString(", ")}")
+    }
+  }
+
+  test("GraftExtensions injects cosine_sim/rolling_hash via session config") {
+    withExtensionSession { s =>
       val h = s.sql("SELECT rolling_hash('abc') AS h").collect().head.getLong(0)
       assert(h == 96354L)
       val c = s.sql(
@@ -62,9 +82,6 @@ class ExtensionsSpec extends AnyFunSuite {
           |  xxhash64(id))""".stripMargin).collect().head.getLong(0)
       assert(hits >= 100 && hits <= 110, // all members + bounded FPs
         s"bloom admitted $hits of 200 (100 true members)")
-    } finally {
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      prior.foreach(SparkSession.setDefaultSession)
     }
   }
 }

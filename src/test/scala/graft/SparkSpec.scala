@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session, lazy). */
+/** Shared local session for all suites (one JVM-wide session, lazy,
+  * built by [[Sessions.local]] like every main). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf0001 = "/root/testdata/sf0.001"
@@ -36,18 +37,7 @@ object SparkSpec {
     p
   }
 
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        cleanOnExit(java.nio.file.Files
-          .createTempDirectory("graft_warehouse")).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Sessions.local(
+    "spark.sql.warehouse.dir" -> cleanOnExit(
+      java.nio.file.Files.createTempDirectory("graft_warehouse")).toString)
 }
